@@ -207,17 +207,11 @@ def main() -> None:
         # removed by registry.serve" (round-9; creates its own fresh
         # session; skipped when the 256x tier was env-disabled and absent)
         spark.stop()
-        from tools.probe_q30_serve import measure_serve
-
         result["q30_256x_serve"] = measure_serve(
             "256x",
-            repeats=5,
             # the SAME env-overridable path the gate above checked — gate
             # and measurement must not disagree
             tier_dir=_tier_dir(sf_dir, 256),
-            # honest context: spark.stop() does not kill the py4j JVM
-            session_note="bench-process JVM after tier sections "
-            "(fresh SparkSession)",
         )
         # no resume session here: measure_serve stops its own, and every
         # later section begins with an (idempotent) spark.stop() before
@@ -231,15 +225,10 @@ def main() -> None:
         # query-independence: q30 is the floor-bound query serve rescues,
         # q02 the execution-bound control, q44 the window shape
         spark.stop()
-        from tools.probe_q30_serve import measure_serve
-
         result["q44_headline_serve"] = measure_serve(
             "headline",
-            repeats=5,
             name="q44_asof_last_click_before_purchase",
             tier_dir=sf_dir,
-            session_note="bench-process JVM after tier sections "
-            "(fresh SparkSession)",
         )
         _write_detail(result)
     if os.environ.get("SPARK_GRAFT_BENCH_1024V", "1") != "0":
@@ -1027,6 +1016,142 @@ def bench_concurrent(spark, sf_dir: str, specs) -> dict:
         "spark_uncached_by_workers": unc_best,
         "duckdb_by_workers": duck_best,
         "fixture_stamp": _headline_stamp(sf_dir),
+    }
+
+
+def measure_serve(
+    tier: str,
+    *,
+    tier_dir: str,
+    repeats: int = 5,
+    name: str = "q30_knn_cosine_topk",
+) -> dict:
+    """One query under the SERVING entry (round 9): a rebuild loop pays
+    the per-run floor — client-side py4j plan construction plus
+    first-collect planning, decomposed to ~0.3 s for q30 in SCALE.md —
+    which a serving deployment (the reference's vector-search endpoint)
+    pays once via ``registry.serve``'s plan cache.
+
+    Serve-mode runs go through a FRESH QueryExecution per submission
+    (``fresh_exec``): re-collecting the served Dataset skips the
+    materialized shuffle map stage (0.04-0.07 s readings), which is the
+    identical-query re-render case, recorded separately as
+    ``cached_shuffle_*``.  Same pinned protocol as tools/spread.py
+    (pretouch, tune, warm, best-of-N); DuckDB re-parses its SQL per run,
+    but its parse+plan is ~ms, so the comparison stays symmetric.
+
+    ``tier_dir`` is the directory the caller's gate checked — gate and
+    measurement must not disagree.  spark.stop() does not kill the py4j
+    gateway JVM, so this runs a fresh SparkSession in the bench's JVM."""
+    import datetime
+
+    import duckdb
+
+    from coldata_spark.tables import DEFAULT_SF_DIR
+    from tools.spread import fixture_stamp_of
+
+    spec = registry.specs()[name]
+    pretouch_s = _pretouch(tier_dir)
+    spark = get_spark(app_name="coldata_spark_bench_serve")
+    tune_for_input(spark, dir_bytes(tier_dir))
+
+    if os.path.isdir(DEFAULT_SF_DIR):  # the smallest sf, as main's warmup
+        spec.fn(spark, DEFAULT_SF_DIR).collect()  # codegen warm
+    spec.fn(spark, tier_dir).collect()  # tier warm
+    spark._jvm.System.gc()
+
+    def timed(make_df) -> list[float]:
+        runs = []
+        for _ in range(repeats):
+            t0 = time.perf_counter()
+            make_df().collect()
+            runs.append(round(time.perf_counter() - t0, 3))
+        return runs
+
+    rebuild_runs = timed(lambda: spec.fn(spark, tier_dir))
+    registry.serve(spark, tier_dir, name).collect()  # build + first-exec warm
+    spark._jvm.System.gc()
+    serve_runs = timed(lambda: fresh_exec(registry.serve(spark, tier_dir, name)))
+    # serve + interactive mode (round 11): AQE off for the burst — the
+    # measured per-stage-replanning share of the floor
+    # (registry.interactive's docstring has the decomposition)
+    with registry.interactive(spark):
+        fresh_exec(registry.serve(spark, tier_dir, name)).collect()  # warm
+        interactive_runs = timed(
+            lambda: fresh_exec(registry.serve(spark, tier_dir, name))
+        )
+    # re-collecting the same Dataset (a client re-rendering the IDENTICAL
+    # query): merge-stage-only time, the scan+score map stage is skipped
+    # via MapOutputTracker reuse
+    cached_runs = timed(lambda: registry.serve(spark, tier_dir, name))
+    spark.stop()
+
+    con = duckdb.connect()
+    con.execute(f"SET threads TO {os.cpu_count()}")
+    for entry in sorted(os.listdir(tier_dir)):
+        if not entry.endswith(".parquet"):
+            continue
+        p = os.path.join(tier_dir, entry)
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        con.execute(
+            f"CREATE VIEW {entry[: -len('.parquet')]} AS "
+            f"SELECT * FROM read_parquet('{src}')"
+        )
+    con.execute(spec.sql).df()  # warm
+    d_runs = []
+    for _ in range(repeats):
+        t0 = time.perf_counter()
+        con.execute(spec.sql).df()
+        d_runs.append(round(time.perf_counter() - t0, 3))
+    con.close()
+
+    d_best = min(d_runs)
+    return {
+        "query": name,
+        "tier_key": None,  # serve path: no rebuild-mode tier entry matches
+        "tier_ratio_at_measurement": None,
+        # markerless dirs (the headline sf dir) stamp their content
+        # version — _spread_is_stale recomputes with the same function
+        "fixture_stamp": fixture_stamp_of(tier_dir) or _headline_stamp(tier_dir),
+        "measured": datetime.date.today().isoformat(),
+        # the dir name under .bench_cache — the staleness check's
+        # resolution key (times alone is ambiguous: 256x, 256x_vector and
+        # 256x_clustered records all carry times=256)
+        "tier": tier,
+        "tier_dir": tier_dir,
+        "times": int(tier.rstrip("x")) if tier.rstrip("x").isdigit() else tier,
+        "spark_sec": min(serve_runs),
+        "duckdb_sec": d_best,
+        "ratio": round(min(serve_runs) / d_best, 2),
+        "ratio_median": round(_median(serve_runs) / _median(d_runs), 2),
+        "spark_spread": [
+            min(serve_runs), round(_median(serve_runs), 3), max(serve_runs)
+        ],
+        "duckdb_spread": [d_best, round(_median(d_runs), 3), max(d_runs)],
+        "spark_runs": serve_runs,
+        "duckdb_runs": d_runs,
+        "rebuild_runs": rebuild_runs,
+        "rebuild_sec": min(rebuild_runs),
+        "rebuild_ratio": round(min(rebuild_runs) / d_best, 2),
+        "plan_floor_sec": round(
+            max(0.0, _median(rebuild_runs) - _median(serve_runs)), 3
+        ),
+        "interactive_runs": interactive_runs,
+        "interactive_sec": min(interactive_runs),
+        "interactive_ratio": round(min(interactive_runs) / d_best, 2),
+        "cached_shuffle_runs": cached_runs,
+        "cached_shuffle_sec": min(cached_runs),
+        "pretouch_s": pretouch_s,
+        "protocol": "page-cache-hot both engines (fixture pre-touched), "
+        "bench-process JVM after tier sections (fresh SparkSession), "
+        f"best-of-{repeats}; serve mode executes the "
+        "registry.serve-cached plan through a fresh QueryExecution per run "
+        "(full re-execution, prepared-statement semantics), interactive "
+        "mode is serve inside registry.interactive (AQE off for the "
+        "burst, restored after), rebuild mode "
+        "reconstructs the DataFrame per run, cached_shuffle re-collects "
+        "the same Dataset (skipped map stages — identical-query re-render "
+        "only); DuckDB re-parses per run (~ms)",
     }
 
 

@@ -144,12 +144,13 @@ def knn_join(
         # session's shuffle.partitions is sized for the big-side scan,
         # and letting AQE coalesce the tiny merge instead costs an extra
         # planning round per stage — measured ~0.3 s/run at the 256x tier
-        # (tools/probe_q30e.py), a third of q30's latency.  Width: one
-        # partition per query up to the cluster's parallelism — a window
-        # partitioned by q_id can never use more reducers than distinct
-        # queries, and capping at defaultParallelism keeps a 1000-query
-        # batch on a big cluster fully parallel while an 8-query batch
-        # locally merges in 8 cheap tasks.
+        # (the probe_q30e script, last in commit b491480), a third of
+        # q30's latency.  Width: one partition per query up to the
+        # cluster's parallelism — a window partitioned by q_id can never
+        # use more reducers than distinct queries, and capping at
+        # defaultParallelism keeps a 1000-query batch on a big cluster
+        # fully parallel while an 8-query batch locally merges in 8 cheap
+        # tasks.
         par = queries.sparkSession.sparkContext.defaultParallelism
         n_merge = max(1, min(nq, par))
         scored = scored.repartition(n_merge, F.col(query_id))

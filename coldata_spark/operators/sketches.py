@@ -122,10 +122,10 @@ def hll_registers(
     The whole fold+mix chain is nested into ONE projection: chaining one
     .select per mix step cost ~0.14 s of per-projection overhead at the
     16x tier (register build 0.45 -> 0.31 s collapsed, identical
-    registers; tools/probe_q114_hash.py, round 10) — whole-stage codegen
-    CSE evaluates each intermediate once regardless of the textual
-    nesting, so the depth-per-projection trade was pure cost on the
-    Spark side.  The DuckDB twin keeps the step-per-CTE chain
+    registers; SCALE.md "Round 10: the q114-family per-row gap") —
+    whole-stage codegen CSE evaluates each intermediate once regardless
+    of the textual nesting, so the depth-per-projection trade was pure
+    cost on the Spark side.  The DuckDB twin keeps the step-per-CTE chain
     (hll_h32_sql), where each intermediate genuinely materializes once."""
     h = _spark_fold64(key_col)
     for step in _mix32_steps(_spark_xor, "div"):

@@ -1016,8 +1016,8 @@ def q125_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     key narrows; the timestamp is reconstructed AFTER the aggregate
     (at most #hours rows).  In the UTC session date_trunc('hour', ts)
     == timestamp_seconds(3600 * (epoch div 3600)) exactly; value-gated
-    identical at the 16x/64x tiers (tools/probe_q135_q125_r15.py,
-    0.36 -> 0.26 s at 16x, flat at 64x) and oracle-parity green."""
+    identical at the 16x/64x tiers (OPTIMIZATION_r15.md, VERDICT ask
+    #5: 0.36 -> 0.26 s at 16x, flat at 64x) and oracle-parity green."""
     ev = load(spark, sf_dir, "events")
     hourly = (
         ev.groupBy(
@@ -1305,9 +1305,9 @@ def q135_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys and one int hash instead of two long hashes per row.  Explicit
     two-level form (count per (cell, user) -> sum/count per cell) keeps
     the planner from re-deriving the distinct; measured 0.84 -> 0.68 s
-    at 64x, 0.43 -> 0.37 s at 16x (tools/probe_q135_q125_r15.py, both
-    variants value-gated identical first).  Integer `div` keeps the
-    truncation semantics of the previous cast-of-double on the
+    at 64x, 0.43 -> 0.37 s at 16x (OPTIMIZATION_r15.md, VERDICT ask
+    #5; both variants value-gated identical first).  Integer `div` keeps
+    the truncation semantics of the previous cast-of-double on the
     non-negative epochs the schema guarantees."""
     ev = load(spark, sf_dir, "events")
     cell = F.expr(
@@ -1323,7 +1323,9 @@ def q135_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_user.groupBy("_cell")
         .agg(
             F.sum("_n").cast("long").alias("n_events"),
-            F.count("*").cast("long").alias("n_users"),
+            # count(user_id), not count(*): the NULL-user group keeps its
+            # events in n_events but is not a user (count(DISTINCT) skips it)
+            F.count("user_id").cast("long").alias("n_users"),
         )
         .select(
             F.expr("cast(_cell div 24 as bigint)").alias("dow"),

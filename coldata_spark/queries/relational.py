@@ -24,7 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from coldata_spark.registry import register
-from coldata_spark.tables import load
+from coldata_spark.tables import fact_join_build, load
 
 
 # --------------------------------------------------------------------------
@@ -135,26 +135,10 @@ def q02_top_orders_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey).select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
-    est = _estimated_bytes(load(spark, sf_dir, "orders"))
-    if 0 < est <= (256 << 20):
-        o = F.broadcast(o)
-    else:
-        # Round 15 (guide §3.1 — pick the strategy deliberately): past the
-        # broadcast gate the planner defaulted to sort-merge, which SORTS
-        # the 5x-larger streamed lineitem side — measured at 256x (fresh
-        # JVM, noop, best-of-2, two sessions): SMJ 7.60/7.92 s vs
-        # shuffled-hash 5.02/6.08 s (tools/probe_q02_r15.py).  The hash
-        # build is the PRUNED orders side; gate the hint on its estimated
-        # per-partition build (<=64 MiB fits execution memory), so at a
-        # scale where partitions stop growing with the input (the
-        # tune_for_input 2000-partition clamp) the hint drops out and the
-        # spill-safe sort-merge returns.  Runtime bloom-filter injection
-        # was probed too and measured NEGATIVE here (9.89 s SMJ+bloom):
-        # the orders-side creation pass costs more than the ~5x shuffle
-        # row cut saves at this tier.
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if 0 < est // max(parts, 1) <= (64 << 20):
-            o = o.hint("shuffle_hash")
+    # past the broadcast gate, hash-build the pruned orders side rather
+    # than sort-merge (tables.fact_join_build has the ladder and numbers;
+    # a runtime bloom filter measured slower — OPTIMIZATION_r15.md ask #3)
+    o = fact_join_build(o, _estimated_bytes(load(spark, sf_dir, "orders")), spark)
     li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
         li.join(o, li.l_orderkey == F.col("o_orderkey"))

@@ -27,7 +27,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from coldata_spark.registry import register
-from coldata_spark.tables import load
+from coldata_spark.tables import fact_join_build, load
 
 
 # --------------------------------------------------------------------------
@@ -245,22 +245,14 @@ def q68_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("o_orderkey", "o_orderdate")
     )
-    # Round 15 (guide §3.1, the q02 ladder — see q77): the ASIA semi-join
-    # prunes orders ~5x but the planner only sees the raw scan estimate,
-    # so the fact-fact join sort-merged.  Broadcast the pruned side while
-    # the raw orders estimate is <=256 MiB, hash-build past that while
-    # the per-partition build fits, sort-merge beyond.  Measured at 64x
-    # (tools/probe_flat_shj_r15.py, value-gated): SMJ 3.96 s,
-    # shuffle_hash 2.89 s.
+    # Round 15 (guide §3.1): the ASIA semi-join prunes orders ~5x but the
+    # planner only sees the raw scan estimate, so the fact-fact join
+    # sort-merged — tables.fact_join_build picks the build instead.
     from coldata_spark.operators.similarity import _estimated_bytes
 
-    est = _estimated_bytes(load(spark, sf_dir, "orders"))
-    if 0 < est <= (256 << 20):
-        orders = F.broadcast(orders)
-    else:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if 0 < est // max(parts, 1) <= (64 << 20):
-            orders = orders.hint("shuffle_hash")
+    orders = fact_join_build(
+        orders, _estimated_bytes(load(spark, sf_dir, "orders")), spark
+    )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -714,25 +706,16 @@ def q77_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust_eu, F.col("o_custkey") == F.col("c_custkey"))
         .select("o_orderkey", "c_nationkey", "n_name")
     )
-    # Round 15 (guide §3.1, the q02 ladder): the planner cannot see the
-    # ~6% date x EUROPE selectivity of ord_eu through the scan estimate,
-    # so it sort-merged the fact-fact join, sorting the 5x-larger
-    # lineitem stream.  Broadcast the pruned side while the RAW orders
-    # estimate stays <=256 MiB (so the actual broadcast is ~6% of that);
-    # past the gate, hash-build it per partition while the estimated
-    # build fits execution memory; only at a scale where neither holds
-    # does the spill-safe sort-merge return.  Measured at 64x
-    # (tools/probe_flat_shj_r15.py, value-gated): SMJ 4.36 s,
-    # shuffle_hash 2.58 s, explicit broadcast 2.35 s.
+    # Round 15 (guide §3.1): the planner cannot see the ~6% date x EUROPE
+    # selectivity of ord_eu through the scan estimate, so it sort-merged
+    # the fact-fact join, sorting the 5x-larger lineitem stream —
+    # tables.fact_join_build picks the build instead (under the RAW
+    # orders gate the actual broadcast is ~6% of it).
     from coldata_spark.operators.similarity import _estimated_bytes
 
-    est = _estimated_bytes(load(spark, sf_dir, "orders"))
-    if 0 < est <= (256 << 20):
-        ord_eu = F.broadcast(ord_eu)
-    else:
-        parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        if 0 < est // max(parts, 1) <= (64 << 20):
-            ord_eu = ord_eu.hint("shuffle_hash")
+    ord_eu = fact_join_build(
+        ord_eu, _estimated_bytes(load(spark, sf_dir, "orders")), spark
+    )
     return (
         li.select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
         .join(ord_eu, F.col("l_orderkey") == F.col("o_orderkey"))

@@ -4,7 +4,9 @@ can diff the docs mechanically."""
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -24,3 +26,41 @@ def test_every_registered_query_has_a_survey_tag():
 
     untagged = [n for n, s in registry.specs().items() if not s.survey_ids]
     assert not untagged, f"queries missing survey= tags: {untagged}"
+
+
+# a repo path cited in code or the README: a tools script (by file path or
+# import) or a captured plan under plans/, optionally with {a,b} braces
+_CITED = re.compile(
+    r"(?<![\w/])(tools/\w+\.py|plans/[\w./{},-]+)|(?:from|import) tools\.(\w+)"
+)
+
+
+def _expand_braces(path: str) -> list[str]:
+    m = re.search(r"\{([^{}]*)\}", path)
+    if not m:
+        return [path]
+    return [
+        p
+        for alt in m.group(1).split(",")
+        for p in _expand_braces(path[: m.start()] + alt + path[m.end() :])
+    ]
+
+
+def test_cited_repo_paths_exist():
+    """Every tools/ script and plans/ file named in the package, tests,
+    tools, bench.py and README.md exists — a deleted script must take its
+    citations with it."""
+    sources = [os.path.join(REPO, "bench.py"), os.path.join(REPO, "README.md")]
+    for d in ("coldata_spark", "tests", "tools"):
+        sources += glob.glob(os.path.join(REPO, d, "**", "*.py"), recursive=True)
+    missing = []
+    for src in sources:
+        with open(src) as f:
+            text = f.read()
+        for m in _CITED.finditer(text):
+            path = m.group(1) or f"tools/{m.group(2)}.py"
+            for p in _expand_braces(path.rstrip(".,")):
+                if not os.path.exists(os.path.join(REPO, p)):
+                    line = text.count("\n", 0, m.start()) + 1
+                    missing.append(f"{os.path.relpath(src, REPO)}:{line}: {p}")
+    assert not missing, "cited paths that do not exist:\n" + "\n".join(missing)

@@ -263,7 +263,7 @@ FLAGS: dict[str, str] = {
     # register-bounded q181 (round-12 verdict #4)
     "q123_profile_orders": "exact-variant(sketched twin: q181)",
     "q74_distinct_counts": "exact-variant(sketched twin: q114)",
-    # decomposed round 13 (tools/probe_q174.py -> SCALE.md): the unique
+    # decomposed round 13 (SCALE.md "q174 decomposed"): the unique
     # rules' full-cardinality hash-agg constant; scheduled gate =
     # audit_table_stats footers (0.28 s at 64x) + q179 HLL monitor
     "q174_quality_audit": "exact-variant(scheduled gate: footers+q179)",
